@@ -84,6 +84,21 @@ def test_triangles_degree_ordered_equals_naive(spark):
     assert fast > 0  # fixture co-purchase graph has triangles
 
 
+def test_edges_are_distinct_ordered_pairs(spark):
+    # labelprop's closed-form first round (min(dst) per node) is only
+    # the vote argmax when every undirected edge appears exactly once
+    # as a < b; pin that, and that no co-purchase pair is lost
+    rows = [(r.a, r.b) for r in graph._edges(spark, SF_SMOKE).collect()]
+    assert rows
+    assert all(a < b for a, b in rows)
+    assert len(rows) == len(set(rows))
+    parts: dict = {}
+    for r in table(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_partkey").collect():
+        parts.setdefault(r.l_orderkey, set()).add(r.l_partkey)
+    want = {(a, b) for ps in parts.values() for a in ps for b in ps if a < b}
+    assert set(rows) == want
+
+
 def test_degree_report_ordered(spark):
     rows = graph.q_graph_degree(spark, SF_ORACLE).collect()
     assert len(rows) == 20

@@ -470,16 +470,9 @@ def test_interval_join_is_equi_on_bins_not_bnlj(spark):
     )
 
 
-@pytest.mark.slow
-def test_plan_snapshot_matches(spark):
-    """Plan-drift tripwire (r8): every query's physical-plan operator
-    fingerprint must match the committed PLAN_SNAPSHOT.json. A
-    mismatch means a plan silently changed shape (a broadcast decayed
-    to sort-merge, an exchange appeared, a Python stage crept in) —
-    exactly the class of regression the r7 bench-drift investigation
-    could not distinguish from host noise. If the change is
-    intentional, regenerate with ``python tools/gen_plan_snapshot.py``
-    and commit the diff alongside the code."""
+def _snapshot_drift(spark, names) -> dict:
+    """Queries among ``names`` whose physical-plan operator
+    fingerprint differs from the committed PLAN_SNAPSHOT.json."""
     import json
     import os
     import sys
@@ -492,7 +485,7 @@ def test_plan_snapshot_matches(spark):
 
     committed = json.load(open(os.path.join(root, "PLAN_SNAPSHOT.json")))
     drift = {}
-    for name in sorted(ALL_QUERIES):
+    for name in sorted(names):
         if name in gps.SKIP:
             continue
         # match the generator's cold-form convention: a slot warmed
@@ -505,10 +498,44 @@ def test_plan_snapshot_matches(spark):
         want = committed.get(name)
         if got != want:
             drift[name] = {"committed": want, "actual": got}
+    return drift
+
+
+@pytest.mark.slow
+def test_plan_snapshot_matches(spark):
+    """Plan-drift tripwire (r8): every query's physical-plan operator
+    fingerprint must match the committed PLAN_SNAPSHOT.json. A
+    mismatch means a plan silently changed shape (a broadcast decayed
+    to sort-merge, an exchange appeared, a Python stage crept in) —
+    exactly the class of regression the r7 bench-drift investigation
+    could not distinguish from host noise. If the change is
+    intentional, regenerate with ``python tools/gen_plan_snapshot.py``
+    and commit the diff alongside the code."""
+    import json
+
+    drift = _snapshot_drift(spark, ALL_QUERIES)
     assert not drift, (
         "plan fingerprints drifted (regenerate tools/gen_plan_snapshot.py "
         f"if intentional): {json.dumps(drift, indent=1)[:2000]}"
     )
+
+
+def test_plan_snapshot_benchmarked_queries(spark):
+    """Default-tier slice of the plan-drift tripwire: the registry
+    queries the benchmark runs, read from the benchmark's own lists
+    so this set follows them. A plan change on a benchmarked query
+    fails here, not only in the slow tier."""
+    import json
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "perfbench"))
+    from workloads import ANALYTICS_OPS, CURATION_OPS
+
+    names = [n for n in ANALYTICS_OPS + CURATION_OPS if n in ALL_QUERIES]
+    assert "q_flagship_transform" in names
+    drift = _snapshot_drift(spark, names)
+    assert not drift, json.dumps(drift, indent=1)
 
 
 def test_bloom_join_prefilter_before_shuffle(spark):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from twitter_etl_spark.queries import retrieval
@@ -407,3 +408,44 @@ def test_pq_index_probe_prunes_and_matches_query_scoring(spark, tmp_path):
     nplan = narrow._jdf.queryExecution().executedPlan().toString()
     assert nplan.count("cell=") <= plan.count("cell=")
     assert narrow.count() == 10
+
+
+_INDEX_LAYOUTS = {
+    "ivf": ("build_ivf_index", "probe_ivf_index"),
+    "ivfpq": ("build_ivfpq_index", "probe_ivfpq_index"),
+    "pq": ("build_pq_index", "probe_pq_index"),
+}
+
+
+@pytest.fixture(scope="module")
+def built_index(spark, tmp_path_factory):
+    """Builds each index layout once per module, on first use."""
+    from twitter_etl_spark import index
+
+    built: dict = {}
+
+    def get(layout: str) -> str:
+        if layout not in built:
+            d = str(tmp_path_factory.mktemp(layout))
+            getattr(index, _INDEX_LAYOUTS[layout][0])(spark, SF_SMOKE, d, k=4, iters=1)
+            built[layout] = d
+        return built[layout]
+
+    return get
+
+
+@pytest.mark.parametrize("bad", ["short", "zero"])
+@pytest.mark.parametrize("layout", sorted(_INDEX_LAYOUTS))
+def test_probe_rejects_bad_query_vec(spark, built_index, layout, bad):
+    """A query one dimension short would be truncated by the cell
+    pick and null-padded by cosine (top-k rows with null cos_sim); an
+    all-zero query has no cosine and divides the int8 scale by zero.
+    Every probe must refuse both up front."""
+    from twitter_etl_spark import index
+
+    idx = built_index(layout)
+    dim = len(table(spark, SF_SMOKE, "embeddings").first()["embedding"])
+    qv = [0.5] * (dim - 1) if bad == "short" else [0.0] * dim
+    probe = getattr(index, _INDEX_LAYOUTS[layout][1])
+    with pytest.raises(ValueError, match="dims" if bad == "short" else "zero norm"):
+        probe(spark, idx, qv)

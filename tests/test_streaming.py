@@ -361,7 +361,7 @@ def test_rate_source_live_cadence(spark):
     import time
 
     from twitter_etl_spark.sources import read_rate_stream
-    from twitter_etl_spark.streaming.microbatch import transform_batch
+    from twitter_etl_spark.pipeline import transform_documents
 
     base = tempfile.mkdtemp()
     sink = os.path.join(base, "sink")
@@ -369,7 +369,7 @@ def test_rate_source_live_cadence(spark):
     seen: list[int] = []
 
     def _sink(batch_df, batch_id):
-        out = transform_batch(batch_df)
+        out = transform_documents(batch_df)
         if out.isEmpty():
             return
         out.write.mode("append").parquet(sink)

@@ -7,9 +7,10 @@ files. Usage::
     python tools/explain_dump.py --out plans/r17 --tag before name [name ...]
     python tools/explain_dump.py --out plans/r17 --tag after  name [name ...]
 
-Plans are captured against the smallest fixture by default (plan
-SHAPE is SF-independent — same convention as gen_plan_snapshot.py;
-override with --sf or $SPARK_GRAFT_SF_DIR) with slot caches cleared
+Plans are captured against ``--sf``, which defaults to
+$SPARK_GRAFT_SF_DIR when it is set and to the sf0.001 fixture
+otherwise (plan SHAPE is SF-independent — same convention as
+gen_plan_snapshot.py), with slot caches cleared
 so the dump shows the cache-independent cold form. All names are
 validated against the registry BEFORE any file is written (ADVICE
 r16: a bad name used to exit 1 after partial output).
@@ -23,8 +24,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: default fixture: the env convention, falling back to the smallest
-#: deterministic SF next to the env-pointed one (plan shape only).
+#: default fixture: $SPARK_GRAFT_SF_DIR, else sf0.001 (plan shape only).
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 

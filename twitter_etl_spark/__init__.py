@@ -13,7 +13,9 @@ Layout
 - :mod:`twitter_etl_spark.cleaning` — the reference's string-cleaning
   chain (reference ``main.R:96-103``) as pure column expressions.
 - :mod:`twitter_etl_spark.pipeline` — the flagship
-  ``transform_tweets``-parity dataflow (reference ``main.R:74-109``).
+  ``transform_tweets``-parity dataflow (reference ``main.R:74-109``)
+  and the engine's one keep-first dedup, shared by the batch query,
+  the micro-batch loop and corpus curation.
 - :mod:`twitter_etl_spark.sources` / :mod:`twitter_etl_spark.sinks`
   — NDJSON landing-zone source, append sink, DDL bootstrap
   (reference ``main.R:17-42, 49-70, 113-121``).
@@ -21,8 +23,10 @@ Layout
   inventory (SURVEY.md §2): each query is a ``(spark, sf_dir) ->
   DataFrame`` callable plus a DuckDB oracle SQL string.
 - :mod:`twitter_etl_spark.streaming` — Structured Streaming
-  micro-batch loop + event-time windowing (reference
-  ``main.R:202-212`` pattern).
+  micro-batch loop running the flagship transform per batch, plus
+  event-time windowing (reference ``main.R:202-212`` pattern).
+- :mod:`twitter_etl_spark.index` — materialized IVF / IVF-PQ / PQ
+  vector indexes: build, partition-pruned probe, incremental absorb.
 """
 
 __version__ = "0.2.0"

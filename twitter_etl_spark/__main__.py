@@ -63,8 +63,9 @@ def main(argv: list[str] | None = None) -> int:
 
     from .session import get_spark
     from .sinks import create_table_if_absent
+    from .pipeline import transform_documents
     from .sources import ensure_landing_dir
-    from .streaming.microbatch import run_microbatch_pipeline, transform_batch
+    from .streaming.microbatch import run_microbatch_pipeline
 
     spark = get_spark("twitter-etl-cli")
 
@@ -78,7 +79,7 @@ def main(argv: list[str] | None = None) -> int:
         keys = [k.strip() for k in opt.keys.split(",") if k.strip()]
 
         def transform(df):
-            out = transform_batch(df)
+            out = transform_documents(df)
             if keys:  # OR-of-terms track filter (main.R:133-136)
                 cond = None
                 for k in keys:

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cleaning import clean_chain
+from .pipeline import keep_first
 
 MIN_TOKENS = 3
 
@@ -40,10 +41,10 @@ def curate(
 ) -> DataFrame:
     """documents -> curated rows (doc_id, text, norm_digest, split).
 
-    Keep-first exact dedup on the normalized digest via
-    ``min_by(struct)`` (hash agg, map-side combine — the flagship's
-    skew-robust shape), then the quality gate and the digest-keyed
-    split assignment.
+    Keep-first exact dedup on the normalized digest via the
+    flagship's :func:`twitter_etl_spark.pipeline.keep_first` (hash
+    agg, map-side combine — the skew-robust shape), then the quality
+    gate and the digest-keyed split assignment.
 
     ``semantic_keep`` (r14 verdict #2) optionally inserts the
     near-dup/semantic stage every real pretraining pipeline runs
@@ -73,15 +74,8 @@ def curate(
     d = docs.select(
         "doc_id", "text", F.md5(norm).alias("norm_digest"), norm.alias("__norm")
     )
-    keeper = (
-        d.groupBy("norm_digest")
-        .agg(F.min_by(F.struct("doc_id", "text", "__norm"), F.col("doc_id")).alias("w"))
-        .select(
-            F.col("w.doc_id").alias("doc_id"),
-            F.col("w.text").alias("text"),
-            "norm_digest",
-            F.col("w.__norm").alias("__norm"),
-        )
+    keeper = keep_first(
+        d, key="norm_digest", order_col="doc_id", payload_cols=["text", "__norm"]
     )
     if neardup_keep is not None:
         nk = neardup_keep.select(

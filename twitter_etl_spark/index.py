@@ -22,6 +22,14 @@ tests/test_retrieval.py):
   PartitionFilters, so the scan lists and reads ONLY the probed
   cells' files — nprobe/K of the corpus, the whole point of IVF.
 
+Three layouts share one skeleton: every builder writes the
+cell-partitioned ``data/`` directory plus ``_centroids.json``
+through :func:`_write_index`, every probe and absorb reads the
+quantizer through :func:`_load_centroids` (which also rejects a
+query vector of the wrong length or zero norm), both absorbs run
+:func:`_absorb`, and both two-pass probes refine their shortlist
+through :func:`_shortlist_refine`.
+
 Reference scope: the reference engine (main.R) has no vector
 serving; this is [EXT] LLM-pipeline surface (SURVEY.md §2.6's ANN
 row, taken from one-job form to build/serve form).
@@ -32,7 +40,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .queries.similarity import _as_double, _kmeans_assign, cosine, train_kmeans
@@ -40,6 +48,94 @@ from .tables import table
 
 _CENTROIDS_FILE = "_centroids.json"
 _DATA_DIR = "data"
+_PQBOOK_FILE = "_pq_codebook.json"
+
+
+def _with_v(df: DataFrame) -> DataFrame:
+    """(vec_id, embedding, v) rows: ``v`` is the embedding as doubles."""
+    return df.select("vec_id", "embedding", _as_double(F.col("embedding")).alias("v"))
+
+
+def _vnorm() -> Column:
+    """L2 norm of ``v`` as a left-to-right fold."""
+    return F.sqrt(
+        F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
+    )
+
+
+def _train(spark: SparkSession, sf_dir: str, k: int, iters: int, centroids: list | None):
+    """The embeddings frame and its coarse quantizer: ``centroids``
+    when given (a FIXED pre-trained quantizer), else one k-means
+    training run."""
+    e = _with_v(table(spark, sf_dir, "embeddings"))
+    if centroids is None:
+        centroids = train_kmeans(e.select("vec_id", "v"), k, iters)
+    return e, centroids
+
+
+def _write_index(rows: DataFrame, index_dir: str, centroids: list) -> None:
+    """The builders' write: rows partitioned by ``cell`` under
+    ``data/`` (overwriting), the quantizer next to them as
+    ``_centroids.json``."""
+    rows.write.mode("overwrite").partitionBy("cell").parquet(
+        os.path.join(index_dir, _DATA_DIR)
+    )
+    with open(os.path.join(index_dir, _CENTROIDS_FILE), "w") as f:
+        json.dump({str(cid): vec for cid, vec in centroids}, f)
+
+
+def _load_centroids(index_dir: str, query_vec: list | None = None) -> list:
+    """The index's frozen quantizer as ``[(cell, centroid), ...]``.
+
+    With ``query_vec``, also check it can be probed: it must have the
+    centroids' length (a short vector would be truncated by the cell
+    pick and null-padded by ``cosine``) and a non-zero norm (cosine
+    and the int8 query scale divide by it). Raises ``ValueError``."""
+    with open(os.path.join(index_dir, _CENTROIDS_FILE)) as f:
+        centroids = [(int(c), v) for c, v in json.load(f).items()]
+    if query_vec is not None:
+        dim = len(centroids[0][1])
+        if len(query_vec) != dim:
+            raise ValueError(
+                f"query_vec has {len(query_vec)} dims, the index centroids have {dim}"
+            )
+        if sum(float(x) * float(x) for x in query_vec) == 0.0:
+            raise ValueError("query_vec has zero norm")
+    return centroids
+
+
+def _nearest_cells(centroids: list, query_vec: list, nprobe: int) -> list:
+    """Driver-side nprobe selection: K squared-distance evaluations
+    over a few-KB table — never a Spark job."""
+    scored = []
+    for cid, vec in centroids:
+        d2 = sum((a - b) * (a - b) for a, b in zip(vec, query_vec))
+        scored.append((d2, cid))
+    scored.sort()
+    return [cid for _, cid in scored[:nprobe]]
+
+
+def _probed_rows(spark: SparkSession, index_dir: str, query_vec: list, nprobe: int) -> DataFrame:
+    """The index rows of the nprobe cells nearest ``query_vec``. The
+    ``cell IN (...)`` filter is a PARTITION filter: the scan never
+    lists, opens, or decodes the other cells."""
+    cells = _nearest_cells(_load_centroids(index_dir, query_vec), query_vec, nprobe)
+    return spark.read.parquet(os.path.join(index_dir, _DATA_DIR)).filter(
+        F.col("cell").isin(cells)
+    )
+
+
+def _exact_cos(query_vec: list) -> Column:
+    """Exact cosine of the raw ``embedding`` against the query, to 6 dp."""
+    qv = F.array(*[F.lit(float(x)) for x in query_vec])
+    return F.round(cosine(_as_double(F.col("embedding")), qv), 6).alias("cos_sim")
+
+
+def _ivf_state(e: DataFrame, centroids: list) -> DataFrame:
+    """(vec_id, embedding, cell) rows of the plain IVF layout."""
+    return _kmeans_assign(e, centroids).select(
+        "vec_id", "embedding", F.col("cluster").alias("cell")
+    )
 
 
 def build_ivf_index(
@@ -62,31 +158,9 @@ def build_ivf_index(
     pre-trained quantizer (the rebuild-vs-absorb equivalence pin
     compares layouts under the same centroids — the
     :func:`build_ivfpq_index` convention)."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", _as_double(F.col("embedding")).alias("v")
-    )
-    if centroids is None:
-        centroids = train_kmeans(e.select("vec_id", "v"), k, iters)
-    assigned = _kmeans_assign(e, centroids).select(
-        "vec_id", "embedding", F.col("cluster").alias("cell")
-    )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(index_dir, _DATA_DIR)
-    )
-    with open(os.path.join(index_dir, _CENTROIDS_FILE), "w") as f:
-        json.dump({str(cid): vec for cid, vec in centroids}, f)
+    e, centroids = _train(spark, sf_dir, k, iters, centroids)
+    _write_index(_ivf_state(e, centroids), index_dir, centroids)
     return centroids
-
-
-def _nearest_cells(centroids: dict, query_vec: list, nprobe: int) -> list:
-    """Driver-side nprobe selection: K squared-distance evaluations
-    over a few-KB table — never a Spark job."""
-    scored = []
-    for cid, vec in centroids.items():
-        d2 = sum((a - b) * (a - b) for a, b in zip(vec, query_vec))
-        scored.append((d2, int(cid)))
-    scored.sort()
-    return [cid for _, cid in scored[:nprobe]]
 
 
 def probe_ivf_index(
@@ -101,22 +175,30 @@ def probe_ivf_index(
     The ``cell IN (...)`` filter is a PARTITION filter — the scan
     never lists, opens, or decodes the other K−nprobe cells
     (asserted on the physical plan in tests). Ranking is
-    TakeOrderedAndProject over the probed slice."""
-    with open(os.path.join(index_dir, _CENTROIDS_FILE)) as f:
-        centroids = json.load(f)
-    cells = _nearest_cells(centroids, query_vec, nprobe)
-    data = spark.read.parquet(os.path.join(index_dir, _DATA_DIR)).filter(
-        F.col("cell").isin(cells)
-    )
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = data.select(
-        "vec_id",
-        "cell",
-        F.round(
-            cosine(_as_double(F.col("embedding")), qv), 6
-        ).alias("cos_sim"),
-    )
+    TakeOrderedAndProject over the probed slice. Raises
+    ``ValueError`` for a query of the wrong length or zero norm."""
+    data = _probed_rows(spark, index_dir, query_vec, nprobe)
+    scored = data.select("vec_id", "cell", _exact_cos(query_vec))
     return scored.orderBy(F.desc("cos_sim"), "vec_id").limit(topk)
+
+
+def _shortlist_refine(
+    data: DataFrame, pq_score: Column, query_vec: list, shortlist: int, topk: int
+) -> DataFrame:
+    """Second pass of the compressed-code probes: keep the
+    ``shortlist`` best rows by the approximate ``pq_score``, then
+    rank them by exact cosine via a broadcast join of the shortlist
+    ids back onto the same pruned cells (the only rows whose
+    ``embedding`` bytes are ever decoded)."""
+    sl = (
+        data.select("vec_id", "cell", F.round(pq_score, 6).alias("pq_score"))
+        .orderBy(F.desc("pq_score"), "vec_id")
+        .limit(shortlist)
+    )
+    refined = data.join(F.broadcast(sl.select("vec_id", "pq_score")), "vec_id").select(
+        "vec_id", "cell", "pq_score", _exact_cos(query_vec)
+    )
+    return refined.orderBy(F.desc("cos_sim"), "vec_id").limit(topk)
 
 
 def _pq_state(e: DataFrame, centroids: list) -> DataFrame:
@@ -134,22 +216,12 @@ def _pq_state(e: DataFrame, centroids: list) -> DataFrame:
             "codes",
             F.transform("v", lambda x: F.round(x / F.col("scale")).cast("int")),
         )
-        .withColumn(
-            "vnorm",
-            F.sqrt(
-                F.aggregate(
-                    F.transform("v", lambda x: x * x),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-        )
         .select(
             "vec_id",
             "embedding",
             "codes",
             "scale",
-            "vnorm",
+            _vnorm().alias("vnorm"),
             F.col("cluster").alias("cell"),
         )
     )
@@ -180,17 +252,8 @@ def build_ivfpq_index(
     Pass ``centroids`` to skip training and build under a FIXED
     pre-trained quantizer — the rebuild-vs-absorb equivalence pin
     compares layouts under the same centroids."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", _as_double(F.col("embedding")).alias("v")
-    )
-    if centroids is None:
-        centroids = train_kmeans(e.select("vec_id", "v"), k, iters)
-    assigned = _pq_state(e, centroids)
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(index_dir, _DATA_DIR)
-    )
-    with open(os.path.join(index_dir, _CENTROIDS_FILE), "w") as f:
-        json.dump({str(cid): vec for cid, vec in centroids}, f)
+    e, centroids = _train(spark, sf_dir, k, iters, centroids)
+    _write_index(_pq_state(e, centroids), index_dir, centroids)
     return centroids
 
 
@@ -206,53 +269,27 @@ def probe_ivfpq_index(
     CODES columns only — the scan is partition-pruned to nprobe
     cells AND column-pruned to ~65 ints + 2 doubles per row, never
     the raw vector; (2) exact cosine refine of the ``shortlist``
-    best, via a broadcast join of the shortlist ids back onto the
-    same pruned cells (the only rows whose ``embedding`` bytes are
-    ever decoded). Output carries both scores (``pq_score`` approx,
-    ``cos_sim`` exact) — the audited-error column pattern."""
-    with open(os.path.join(index_dir, _CENTROIDS_FILE)) as f:
-        centroids = json.load(f)
-    cells = _nearest_cells(centroids, query_vec, nprobe)
+    best (:func:`_shortlist_refine`). Output carries both scores
+    (``pq_score`` approx, ``cos_sim`` exact) — the audited-error
+    column pattern. Raises ``ValueError`` for a query of the wrong
+    length or zero norm."""
+    data = _probed_rows(spark, index_dir, query_vec, nprobe)
     qscale = max(abs(float(x)) for x in query_vec) / 127.0
     qcode = [int(round(float(x) / qscale)) for x in query_vec]
     qnorm = sum(float(x) * float(x) for x in query_vec) ** 0.5
-    data = spark.read.parquet(os.path.join(index_dir, _DATA_DIR)).filter(
-        F.col("cell").isin(cells)
-    )
     qc = F.array(*[F.lit(c) for c in qcode])
     int_dot = F.aggregate(
         F.zip_with(qc, F.col("codes"), lambda x, y: (x * y).cast("long")),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    sl = (
-        data.select(
-            "vec_id",
-            "cell",
-            F.round(
-                int_dot.cast("double")
-                * F.lit(qscale)
-                * F.col("scale")
-                / (F.lit(qnorm) * F.col("vnorm")),
-                6,
-            ).alias("pq_score"),
-        )
-        .orderBy(F.desc("pq_score"), "vec_id")
-        .limit(shortlist)
+    pq_score = (
+        int_dot.cast("double")
+        * F.lit(qscale)
+        * F.col("scale")
+        / (F.lit(qnorm) * F.col("vnorm"))
     )
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    refined = data.join(
-        F.broadcast(sl.select("vec_id", "pq_score")), "vec_id"
-    ).select(
-        "vec_id",
-        "cell",
-        "pq_score",
-        F.round(cosine(_as_double(F.col("embedding")), qv), 6).alias("cos_sim"),
-    )
-    return refined.orderBy(F.desc("cos_sim"), "vec_id").limit(topk)
-
-
-_PQBOOK_FILE = "_pq_codebook.json"
+    return _shortlist_refine(data, pq_score, query_vec, shortlist, topk)
 
 
 def build_pq_index(
@@ -279,38 +316,16 @@ def build_pq_index(
     (SCALE.md: shortlist 100 vs the scalar form's 30)."""
     from .queries.similarity import _pq_codes, train_pq_codebook
 
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", _as_double(F.col("embedding")).alias("v")
+    e, centroids = _train(spark, sf_dir, k, iters, None)
+    book = train_pq_codebook(e.select("vec_id", "v"), len(centroids[0][1]))
+    rows = _kmeans_assign(e, centroids).select(
+        "vec_id",
+        "embedding",
+        _pq_codes(book).alias("pq_codes"),
+        _vnorm().alias("vnorm"),
+        F.col("cluster").alias("cell"),
     )
-    centroids = train_kmeans(e.select("vec_id", "v"), k, iters)
-    dim = len(centroids[0][1])
-    book = train_pq_codebook(e.select("vec_id", "v"), dim)
-    assigned = (
-        _kmeans_assign(e, centroids)
-        .withColumn("pq_codes", _pq_codes(book))
-        .withColumn(
-            "vnorm",
-            F.sqrt(
-                F.aggregate(
-                    F.transform("v", lambda x: x * x),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-        )
-        .select(
-            "vec_id",
-            "embedding",
-            "pq_codes",
-            "vnorm",
-            F.col("cluster").alias("cell"),
-        )
-    )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(index_dir, _DATA_DIR)
-    )
-    with open(os.path.join(index_dir, _CENTROIDS_FILE), "w") as f:
-        json.dump({str(cid): vec for cid, vec in centroids}, f)
+    _write_index(rows, index_dir, centroids)
     with open(os.path.join(index_dir, _PQBOOK_FILE), "w") as f:
         json.dump(book, f)
     return centroids, book
@@ -333,12 +348,11 @@ def probe_pq_index(
     partition-pruned to nprobe cells and column-pruned to
     (vec_id, pq_codes, vnorm); raw embedding bytes are read only for
     the shortlist refine — identical serving shape to
-    :func:`probe_ivfpq_index` at 1/8 the code bytes."""
-    with open(os.path.join(index_dir, _CENTROIDS_FILE)) as f:
-        centroids = json.load(f)
+    :func:`probe_ivfpq_index` at 1/8 the code bytes. Raises
+    ``ValueError`` for a query of the wrong length or zero norm."""
+    data = _probed_rows(spark, index_dir, query_vec, nprobe)
     with open(os.path.join(index_dir, _PQBOOK_FILE)) as f:
         book = json.load(f)
-    cells = _nearest_cells(centroids, query_vec, nprobe)
     m = len(book)
     d_sub = len(book[0][0])
     qnorm = sum(float(x) * float(x) for x in query_vec) ** 0.5
@@ -346,63 +360,62 @@ def probe_pq_index(
     dot_lut, nsq_lut = [], []
     for j in range(m):
         qj = [float(x) for x in query_vec[j * d_sub : (j + 1) * d_sub]]
-        dot_lut.append(
-            [sum(a * b for a, b in zip(qj, c)) for c in book[j]]
-        )
+        dot_lut.append([sum(a * b for a, b in zip(qj, c)) for c in book[j]])
         nsq_lut.append([sum(a * a for a in c) for c in book[j]])
-    data = spark.read.parquet(os.path.join(index_dir, _DATA_DIR)).filter(
-        F.col("cell").isin(cells)
-    )
-    approx_dot = sum(
-        (
-            F.element_at(
-                F.array(*[F.lit(v) for v in dot_lut[j]]),
-                F.element_at("pq_codes", j + 1) + 1,
-            )
-            for j in range(m)
-        ),
-        F.lit(0.0),
-    )
-    rec_nsq = sum(
-        (
-            F.element_at(
-                F.array(*[F.lit(v) for v in nsq_lut[j]]),
-                F.element_at("pq_codes", j + 1) + 1,
-            )
-            for j in range(m)
-        ),
-        F.lit(0.0),
-    )
-    sl = (
-        data.select(
-            "vec_id",
-            "cell",
-            F.round(
-                approx_dot / (F.lit(qnorm) * F.sqrt(rec_nsq)), 6
-            ).alias("pq_score"),
+
+    def lut_sum(lut):
+        return sum(
+            (
+                F.element_at(
+                    F.array(*[F.lit(v) for v in lut[j]]),
+                    F.element_at("pq_codes", j + 1) + 1,
+                )
+                for j in range(m)
+            ),
+            F.lit(0.0),
         )
-        .orderBy(F.desc("pq_score"), "vec_id")
-        .limit(shortlist)
-    )
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    refined = data.join(
-        F.broadcast(sl.select("vec_id", "pq_score")), "vec_id"
-    ).select(
-        "vec_id",
-        "cell",
-        "pq_score",
-        F.round(cosine(_as_double(F.col("embedding")), qv), 6).alias("cos_sim"),
-    )
-    return refined.orderBy(F.desc("cos_sim"), "vec_id").limit(topk)
+
+    pq_score = lut_sum(dot_lut) / (F.lit(qnorm) * F.sqrt(lut_sum(nsq_lut)))
+    return _shortlist_refine(data, pq_score, query_vec, shortlist, topk)
 
 
-#: Cell-imbalance bar above which :func:`absorb_ivfpq_batch` flags
-#: the index for retraining. max/mean cell size of a healthy k-means
+#: Cell-imbalance bar above which an absorb flags the index for
+#: retraining. max/mean cell size of a healthy k-means
 #: partition sits near 1-3; past 4x the hottest cell dominates probe
 #: latency (a probe that lands there reads max_cell/mean_cell times
 #: the average bytes) and the quantizer no longer reflects the data
 #: distribution — rebuild with fresh training.
 RETRAIN_IMBALANCE = 4.0
+
+
+def _absorb(spark: SparkSession, index_dir: str, new_embeddings: DataFrame, state) -> dict:
+    """Shared absorb: encode the batch under the frozen quantizer
+    with ``state`` (the layout's build projection), append it, and
+    report cell drift from a partition-column-only stats scan."""
+    st = state(_with_v(new_embeddings), _load_centroids(index_dir))
+    n_added = st.count()
+    st.write.mode("append").partitionBy("cell").parquet(
+        os.path.join(index_dir, _DATA_DIR)
+    )
+    sizes = (
+        spark.read.parquet(os.path.join(index_dir, _DATA_DIR))
+        .groupBy("cell")
+        .count()
+    )
+    row = sizes.agg(
+        F.count(F.lit(1)).alias("n_cells"),
+        F.max("count").alias("max_cell"),
+        F.avg("count").alias("mean_cell"),
+    ).first()
+    imbalance = float(row["max_cell"]) / float(row["mean_cell"])
+    return {
+        "n_added": n_added,
+        "n_cells": int(row["n_cells"]),
+        "max_cell": int(row["max_cell"]),
+        "mean_cell": round(float(row["mean_cell"]), 2),
+        "imbalance": round(imbalance, 3),
+        "retrain": imbalance > RETRAIN_IMBALANCE,
+    }
 
 
 def absorb_ivfpq_batch(
@@ -431,35 +444,7 @@ def absorb_ivfpq_batch(
     Caller contract: batch vec_ids are new (an upsert would need a
     read-side dedup or compaction pass — out of scope here, as for
     any append-only parquet layout)."""
-    with open(os.path.join(index_dir, _CENTROIDS_FILE)) as f:
-        centroids = [(int(c), v) for c, v in json.load(f).items()]
-    e = new_embeddings.select(
-        "vec_id", "embedding", _as_double(F.col("embedding")).alias("v")
-    )
-    st = _pq_state(e, centroids)
-    n_added = st.count()
-    st.write.mode("append").partitionBy("cell").parquet(
-        os.path.join(index_dir, _DATA_DIR)
-    )
-    sizes = (
-        spark.read.parquet(os.path.join(index_dir, _DATA_DIR))
-        .groupBy("cell")
-        .count()
-    )
-    row = sizes.agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        F.max("count").alias("max_cell"),
-        F.avg("count").alias("mean_cell"),
-    ).first()
-    imbalance = float(row["max_cell"]) / float(row["mean_cell"])
-    return {
-        "n_added": n_added,
-        "n_cells": int(row["n_cells"]),
-        "max_cell": int(row["max_cell"]),
-        "mean_cell": round(float(row["mean_cell"]), 2),
-        "imbalance": round(imbalance, 3),
-        "retrain": imbalance > RETRAIN_IMBALANCE,
-    }
+    return _absorb(spark, index_dir, new_embeddings, _pq_state)
 
 
 def absorb_ivf_batch(
@@ -484,34 +469,4 @@ def absorb_ivf_batch(
     (tests/test_retrieval.py — the absorb_ivfpq_batch convention).
 
     Caller contract: batch vec_ids are new (append-only layout)."""
-    with open(os.path.join(index_dir, _CENTROIDS_FILE)) as f:
-        centroids = [(int(c), v) for c, v in json.load(f).items()]
-    e = new_embeddings.select(
-        "vec_id", "embedding", _as_double(F.col("embedding")).alias("v")
-    )
-    st = _kmeans_assign(e, centroids).select(
-        "vec_id", "embedding", F.col("cluster").alias("cell")
-    )
-    n_added = st.count()
-    st.write.mode("append").partitionBy("cell").parquet(
-        os.path.join(index_dir, _DATA_DIR)
-    )
-    sizes = (
-        spark.read.parquet(os.path.join(index_dir, _DATA_DIR))
-        .groupBy("cell")
-        .count()
-    )
-    row = sizes.agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        F.max("count").alias("max_cell"),
-        F.avg("count").alias("mean_cell"),
-    ).first()
-    imbalance = float(row["max_cell"]) / float(row["mean_cell"])
-    return {
-        "n_added": n_added,
-        "n_cells": int(row["n_cells"]),
-        "max_cell": int(row["max_cell"]),
-        "mean_cell": round(float(row["mean_cell"]), 2),
-        "imbalance": round(imbalance, 3),
-        "retrain": imbalance > RETRAIN_IMBALANCE,
-    }
+    return _absorb(spark, index_dir, new_embeddings, _ivf_state)

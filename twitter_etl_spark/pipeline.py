@@ -24,6 +24,11 @@ parity filter is the ``lang == 'es'`` predicate):
   ``row_number()``-window variant of the same contract lives in
   ``queries/ref_parity.q_dedup_keyed`` — same semantics, but the
   aggregate form is the 100 TB shape.
+
+This is the engine's one keep-first transform: the micro-batch loop
+(``streaming/microbatch.py``) runs :func:`transform_documents` on
+each batch, and ``curation.curate`` dedups through
+:func:`keep_first`.
 """
 
 from __future__ import annotations

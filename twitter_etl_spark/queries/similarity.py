@@ -550,16 +550,21 @@ def _np_book(book: list):
 
 def _pq_fold_d2(S, C):
     """Squared distances of subvector rows ``S`` (n x d) to centroids
-    ``C`` (k x d) with the JVM fold's exact float semantics: per
-    element (x - y)·(x - y), then a left-to-right accumulation from
-    0.0 over positions (``aggregate(zip_with(...), 0.0, acc + x)``).
-    Element-wise NumPy add/sub/mul are the same IEEE-754 ops in the
-    same order, so results are bit-identical to the expression form
-    (pinned by tests/test_similarity_multimodal.py's replica and the
-    index/query cross-check in tests/test_retrieval.py)."""
+    ``C`` — one shared codebook (k x d) or one per row (n x k x d) —
+    with the JVM fold's exact float semantics: per element
+    d = x - y, then d * d (a product, not a power, so no NumPy fast
+    path decides the rounding), then a left-to-right accumulation
+    from 0.0 over positions (``aggregate(zip_with(...), 0.0,
+    acc + x)``). Element-wise NumPy add/sub/mul are the same
+    IEEE-754 ops in the same order, so results are bit-identical to
+    the expression form (pinned by
+    tests/test_similarity_multimodal.py's replica and the
+    index/query cross-check in tests/test_retrieval.py). This is the
+    only NumPy copy of the fold."""
     import numpy as np
 
-    sq = (S[:, None, :] - C[None, :, :]) ** 2
+    d = S[:, None, :] - C
+    sq = d * d
     acc = np.zeros(sq.shape[:2])
     for p in range(sq.shape[2]):
         acc += sq[:, :, p]
@@ -590,14 +595,8 @@ def _pq_assign_arrow(sub: DataFrame, book: list) -> DataFrame:
             SV = np.asarray(sv.flatten(), dtype=np.float64).reshape(
                 b.num_rows, B.shape[2]
             )
-            # gather each row's own subspace codebook, then the exact
-            # fold: sq elementwise, accumulate positions left-to-right
-            C = B[J]  # (n, ksub, d_sub)
-            sq = (SV[:, None, :] - C) ** 2
-            acc = np.zeros(sq.shape[:2])
-            for p in range(sq.shape[2]):
-                acc += sq[:, :, p]
-            cl = acc.argmin(axis=1).astype(np.int32)
+            # each row against its own subspace codebook (n, ksub, d_sub)
+            cl = _pq_fold_d2(SV, B[J]).argmin(axis=1).astype(np.int32)
             yield pa.RecordBatch.from_arrays(
                 [j, pa.array(cl, type=pa.int32()), sv],
                 names=["j", "cluster", "sv"],

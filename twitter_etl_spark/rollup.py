@@ -24,7 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sinks import publish_version, read_version
+from .sinks import latest_version, publish_version, read_version
 
 #: partial-state columns (the mergeable monoid) for the lang rollup.
 _STATE_COLS = ("lang", "n", "s", "mn", "mx")
@@ -56,7 +56,7 @@ def update_rollup(
     Cost: one partial agg over the BATCH plus a merge over
     |rollup| + |batch partials| rows — history is never re-read."""
     fresh = _partial(new_docs)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
+    if latest_version(rollup_dir) is not None:
         prev = read_version(spark, rollup_dir).select(*_STATE_COLS)
         state = prev.unionByName(fresh.select(*_STATE_COLS))
     else:
@@ -106,7 +106,7 @@ def update_distinct_rollup(
     (event_type, bucket) — one hash agg over |rollup| + |batch
     partials| rows, history never re-read."""
     fresh = _distinct_partial(new_events)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
+    if latest_version(rollup_dir) is not None:
         prev = read_version(spark, rollup_dir).select(*_DISTINCT_STATE_COLS)
         state = prev.unionByName(fresh.select(*_DISTINCT_STATE_COLS))
     else:
@@ -146,7 +146,7 @@ def update_hll_rollup(
     fresh = new_events.groupBy("event_type").agg(
         F.expr("hll_sketch_agg(user_id)").alias("hll")
     )
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
+    if latest_version(rollup_dir) is not None:
         prev = read_version(spark, rollup_dir).select(*_HLL_STATE_COLS)
         state = prev.unionByName(fresh.select(*_HLL_STATE_COLS))
     else:
@@ -192,7 +192,7 @@ def update_register_rollup(
         .groupBy("event_type", "j")
         .agg(F.max("rho").alias("m_j"))
     )
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
+    if latest_version(rollup_dir) is not None:
         prev = read_version(spark, rollup_dir).select(*_REG_STATE_COLS)
         state = prev.unionByName(fresh.select(*_REG_STATE_COLS))
     else:
@@ -241,7 +241,7 @@ def update_bloom_rollup(
         .select(_bloom_pos(F.col("j"), F.col("digest")).alias("pos"))
         .distinct()
     )
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
+    if latest_version(rollup_dir) is not None:
         prev = read_version(spark, rollup_dir).select(*_BLOOM_STATE_COLS)
         state = prev.unionByName(fresh).distinct()
     else:
@@ -303,7 +303,7 @@ def update_kmv_rollup(
     from .queries.sketches import _KMV_K, kmv_hash_rows
 
     fresh = kmv_hash_rows(new_events, "user_id", "event_type")
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
+    if latest_version(rollup_dir) is not None:
         prev = read_version(spark, rollup_dir).select(*_KMV_STATE_COLS)
         state = prev.unionByName(fresh.select(*_KMV_STATE_COLS)).distinct()
     else:
@@ -364,7 +364,7 @@ def update_minhash_rollup(
     shingles/digests the BATCH only and unions it with
     |rollup state| rows — history text is never re-read."""
     fresh = _minhash_doc_rows(new_docs)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
+    if latest_version(rollup_dir) is not None:
         prev = read_version(spark, rollup_dir).select(*_MINHASH_STATE_COLS)
         state = prev.unionByName(fresh.select(*_MINHASH_STATE_COLS)).distinct()
     else:
@@ -534,7 +534,7 @@ def update_semdedup_rollup(
     History embeddings are never re-read — the union is |rollup
     state| + |batch| rows of already-normed vectors."""
     fresh = _semdedup_vec_rows(new_embeddings)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
+    if latest_version(rollup_dir) is not None:
         prev = read_version(spark, rollup_dir).select(*_SEMDEDUP_STATE_COLS)
         state = _keep_min_by_digest(
             prev.unionByName(fresh.select(*_SEMDEDUP_STATE_COLS))
@@ -644,7 +644,7 @@ def update_semdedup_adaptive_rollup(
     stays batch-order-independent even if a vec_id were ever
     re-absorbed with a changed embedding."""
     fresh = _sema_vec_rows(new_embeddings)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
+    if latest_version(rollup_dir) is not None:
         prev = read_version(spark, rollup_dir).select(*_SEMA_STATE_COLS)
         state = _keep_min_by_digest(prev.unionByName(fresh))
     else:
@@ -803,7 +803,7 @@ def update_histogram_rollup(
     fresh = new_customers.groupBy(
         "c_mktsegment", bucket.alias("bucket")
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
+    if latest_version(rollup_dir) is not None:
         prev = read_version(spark, rollup_dir).select(*_HIST_STATE_COLS)
         state = (
             prev.unionByName(fresh.select(*_HIST_STATE_COLS))
@@ -904,7 +904,7 @@ def update_windowdigest_rollup(
     per DISTINCT window content — boilerplate collapses map-side
     exactly as in the one-shot query's digest agg."""
     fresh = _window_state(new_docs)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
+    if latest_version(rollup_dir) is not None:
         prev = read_version(spark, rollup_dir).select(*_SUBSTR_STATE_COLS)
         state = (
             prev.unionByName(fresh.select(*_SUBSTR_STATE_COLS))
@@ -975,11 +975,9 @@ def batch_hwm(rollup_dir: str, version: int | None = None) -> int:
     ``_LATEST`` pointer first, so the hwm read is consistent with
     whatever snapshot a concurrent reader sees."""
     if version is None:
-        latest = os.path.join(rollup_dir, "_LATEST")
-        if not os.path.exists(latest):
+        version = latest_version(rollup_dir)
+        if version is None:
             return -1
-        with open(latest) as f:
-            version = int(f.read().strip())
     p = os.path.join(rollup_dir, f"_BATCH_HWM_v={version}")
     if not os.path.exists(p):
         return -1
@@ -1035,13 +1033,12 @@ def update_drift_rollup(
     every rollup here (one foreachBatch executes at a time)."""
     from .queries.dq import drift_counts
 
-    have_state = os.path.exists(os.path.join(rollup_dir, "_LATEST"))
-    if batch_id is not None and have_state:
-        if batch_id <= drift_batch_hwm(rollup_dir):
-            with open(os.path.join(rollup_dir, "_LATEST")) as f:
-                return int(f.read().strip())
+    latest = latest_version(rollup_dir)
+    if latest is not None and batch_id is not None:
+        if batch_id <= drift_batch_hwm(rollup_dir, latest):
+            return latest
     fresh = drift_counts(new_docs)
-    if have_state:
+    if latest is not None:
         prev = read_version(spark, rollup_dir).select(*_DRIFT_STATE_COLS)
         state = (
             prev.unionByName(fresh.select(*_DRIFT_STATE_COLS))
@@ -1117,7 +1114,7 @@ def update_phash_rollup(
     from .queries.multimodal_q import phash_frame
 
     fresh = phash_frame(new_docs)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
+    if latest_version(rollup_dir) is not None:
         prev = read_version(spark, rollup_dir).select(*_PHASH_STATE_COLS)
         state = (
             prev.unionByName(fresh.select(*_PHASH_STATE_COLS))
@@ -1194,13 +1191,12 @@ def update_softdedup_rollup(
     foreachBatch ``batch_id``, replayed ids ≤ the published
     high-water mark are skipped (plain-sum monoid + at-least-once
     delivery = double count otherwise)."""
-    have_state = os.path.exists(os.path.join(rollup_dir, "_LATEST"))
-    if batch_id is not None and have_state:
-        if batch_id <= batch_hwm(rollup_dir):
-            with open(os.path.join(rollup_dir, "_LATEST")) as f:
-                return int(f.read().strip())
+    latest = latest_version(rollup_dir)
+    if latest is not None and batch_id is not None:
+        if batch_id <= batch_hwm(rollup_dir, latest):
+            return latest
     fresh = _soft_partial(new_docs)
-    if have_state:
+    if latest is not None:
         prev = read_version(spark, rollup_dir).select(*_SOFT_STATE_COLS)
         state = (
             prev.unionByName(fresh.select(*_SOFT_STATE_COLS))
@@ -1279,7 +1275,7 @@ def update_sample_rollup(
     fresh = _sample_keys(new_docs).orderBy(
         F.asc_nulls_last("sample_key"), F.asc_nulls_last("doc_id")
     ).limit(k)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
+    if latest_version(rollup_dir) is not None:
         prev = read_version(spark, rollup_dir).select(*_SAMPLE_STATE_COLS)
         # Deterministic survivor per doc_id (r13 advice): if a doc_id
         # is re-absorbed with CHANGED text, its sample_key differs
@@ -1422,7 +1418,7 @@ def update_curation_rollup(
         .cast("bigint")
         .alias("q_ok"),
     )
-    if os.path.exists(os.path.join(docs_dir, "_LATEST")):
+    if latest_version(docs_dir) is not None:
         prev = read_version(spark, docs_dir).select(*_CURATION_STATE_COLS)
         state = (
             prev.unionByName(keeper)
@@ -1444,7 +1440,7 @@ def update_curation_rollup(
     if neardup:
         nd_dir = os.path.join(rollup_dir, "nd")
         fresh_nd = _curation_nd_rows(kb)
-        if os.path.exists(os.path.join(nd_dir, "_LATEST")):
+        if latest_version(nd_dir) is not None:
             prev_nd = read_version(spark, nd_dir).select(
                 *_CURATION_ND_STATE_COLS
             )
@@ -1550,10 +1546,10 @@ def curation_keeplist(
     docs_dir = os.path.join(rollup_dir, "docs")
     st = read_version(spark, docs_dir, version).select(*_CURATION_STATE_COLS)
     nd_dir = os.path.join(rollup_dir, "nd")
-    if os.path.exists(os.path.join(nd_dir, "_LATEST")):
+    if latest_version(nd_dir) is not None:
         st = _apply_neardup_keeplist(spark, st, nd_dir)
     sem_dir = os.path.join(rollup_dir, "sem")
-    if os.path.exists(os.path.join(sem_dir, "_LATEST")):
+    if latest_version(sem_dir) is not None:
         sk = semdedup_adaptive_keeplist(spark, sem_dir).select(
             F.col("vec_id").alias("__sk_id"), F.col("kept").alias("__sk_kept")
         )

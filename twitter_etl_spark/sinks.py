@@ -354,12 +354,23 @@ def publish_version(df: DataFrame, table_dir: str) -> int:
     return nxt
 
 
+def latest_version(table_dir: str) -> int | None:
+    """The version the ``_LATEST`` pointer names, or None when
+    nothing has been published yet — the one reader of the pointer."""
+    try:
+        with open(os.path.join(table_dir, "_LATEST")) as f:
+            return int(f.read().strip())
+    except FileNotFoundError:
+        return None
+
+
 def read_version(spark: SparkSession, table_dir: str, version: int | None = None) -> DataFrame:
     """Read a published snapshot: the ``_LATEST`` pointer by
     default, or any retained ``v=N`` for time travel."""
     if version is None:
-        with open(os.path.join(table_dir, "_LATEST")) as f:
-            version = int(f.read().strip())
+        version = latest_version(table_dir)
+        if version is None:
+            raise FileNotFoundError(f"no published version under {table_dir}")
     return spark.read.parquet(os.path.join(table_dir, f"v={version}"))
 
 
@@ -375,8 +386,9 @@ def vacuum_versions(table_dir: str, keep: int = 2) -> list[int]:
     like ``compact_table``."""
     import shutil
 
-    with open(os.path.join(table_dir, "_LATEST")) as f:
-        latest = int(f.read().strip())
+    latest = latest_version(table_dir)
+    if latest is None:
+        raise FileNotFoundError(f"no published version under {table_dir}")
     versions = sorted(
         int(p.split("=")[1])
         for p in os.listdir(table_dir)

@@ -5,8 +5,11 @@ bounded chunk loop of ingest -> transform -> append (reference
 ``main.R:202-212``). This package reproduces it natively:
 
 - :mod:`.microbatch` — the ETL loop as a file-source stream +
-  ``foreachBatch`` transform/append, checkpointed (an upgrade from
-  the reference's at-least-once to effectively-once).
+  ``foreachBatch`` running the batch flagship transform
+  (``pipeline.transform_documents``) and an append, checkpointed (an
+  upgrade from the reference's at-least-once to effectively-once).
+  The plain, global-dedup, idempotent and rollup loops share one
+  starter and differ only in their per-batch sink.
 - :mod:`.windows` — event-time operators: tumbling / sliding /
   session windows with watermarks, and stateful streaming dedup.
 """

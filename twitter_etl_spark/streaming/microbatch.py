@@ -8,8 +8,13 @@ bounded slice of the stream to a landing file (``get_tweets``,
 
 Spark-native shape: the landing directory IS the stream.
 ``readStream.json`` (explicit schema) + ``foreachBatch`` running
-the same transform used in batch, appending to a parquet sink.
-Differences, both deliberate upgrades:
+the batch flagship transform itself
+(:func:`twitter_etl_spark.pipeline.transform_documents` — one query
+for batch and stream, no per-batch copy), appending through
+:func:`twitter_etl_spark.sinks.append_table`. Every ``run_*`` loop
+below differs only in its per-batch sink; the source, checkpoint,
+trigger and await wiring live in one starter (:func:`_start`).
+Differences from the reference, both deliberate upgrades:
 
 - checkpointing makes the loop effectively-once (the reference
   loses the in-flight chunk on crash; SURVEY.md §1.3);
@@ -24,33 +29,41 @@ family, not a sink property.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import os
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cleaning import clean_chain
+from ..pipeline import transform_documents
+from ..sinks import append_table
 from ..sources import DOCUMENTS_SCHEMA, read_ndjson_stream
 
 
-def transform_batch(df: DataFrame) -> DataFrame:
-    """Per-batch transform — identical semantics to the batch
-    flagship (filter -> project/rename -> clean -> keep-first dedup
-    within the batch, reference ``main.R:74-109``)."""
-    cleaned = (
-        df.filter(F.col("lang") == "es")
-        .select(
-            F.col("doc_id").alias("tweet_id"),
-            F.col("lang"),
-            F.col("text").alias("content"),
-            F.col("source"),
-        )
-        .withColumn("content", clean_chain(F.col("content")))
+def _start(
+    spark: SparkSession,
+    landing_dir: str,
+    checkpoint_dir: str,
+    sink,
+    *,
+    cadence_seconds: int | None = None,
+    await_seconds: int | None = None,
+):
+    """Start the checkpointed documents stream over ``landing_dir``
+    with ``sink`` as its ``foreachBatch`` function. Without a
+    cadence the run is bounded (``availableNow``) and awaited;
+    with one it is a live ``processingTime`` stream, returned
+    running."""
+    writer = (
+        read_ndjson_stream(spark, landing_dir, DOCUMENTS_SCHEMA)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
     )
-    w = Window.partitionBy("content").orderBy("tweet_id")
-    return (
-        cleaned.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    if cadence_seconds is not None:
+        return writer.trigger(processingTime=f"{cadence_seconds} seconds").start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination(await_seconds)
+    return q
 
 
 def key_index_path(sink_path: str) -> str:
@@ -87,13 +100,10 @@ def run_microbatch_pipeline_global_dedup(
     idempotent sink (dynamic-overwrite partition per batch id, or a
     table format with txn commit) would close the remaining window.
     """
-    stream = read_ndjson_stream(spark, landing_dir, DOCUMENTS_SCHEMA)
     index_path = key_index_path(sink_path)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        out = transform_batch(batch_df).withColumn(
+        out = transform_documents(batch_df).withColumn(
             "__digest", F.md5(F.col("content"))
         )
         if os.path.exists(index_path):
@@ -110,18 +120,10 @@ def run_microbatch_pipeline_global_dedup(
         finally:
             out.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(await_seconds)
-    return q
+    return _start(spark, landing_dir, checkpoint_dir, _sink, await_seconds=await_seconds)
 
 
-def idempotent_batch_writer(sink_path: str, transform=transform_batch):
+def idempotent_batch_writer(sink_path: str, transform=transform_documents):
     """foreachBatch writer with **idempotent replay**: each batch
     lands in its own ``batch_id=N`` partition directory with
     overwrite semantics, so a batch replayed after a crash between
@@ -154,16 +156,13 @@ def run_microbatch_pipeline_idempotent(
     """The loop with :func:`idempotent_batch_writer` as the sink —
     the exactly-once-effective upgrade of the reference's
     at-least-once append (``main.R:118``; SURVEY.md §1.3)."""
-    stream = read_ndjson_stream(spark, landing_dir, DOCUMENTS_SCHEMA)
-    q = (
-        stream.writeStream.foreachBatch(idempotent_batch_writer(sink_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        spark,
+        landing_dir,
+        checkpoint_dir,
+        idempotent_batch_writer(sink_path),
+        await_seconds=await_seconds,
     )
-    q.awaitTermination(await_seconds)
-    return q
 
 
 def run_microbatch_pipeline(
@@ -175,32 +174,22 @@ def run_microbatch_pipeline(
     bounded: bool = True,
     cadence_seconds: int = 60,
     await_seconds: int | None = None,
-    transform=transform_batch,
+    transform=transform_documents,
 ):
     """Run the ETL loop. ``bounded=True`` = the reference's
     N-chunks-then-exit run (``availableNow``); otherwise a live
     ``processingTime`` cadence. ``transform`` defaults to the
-    reference-parity batch transform. Returns the StreamingQuery
-    (already awaited when bounded)."""
-    stream = read_ndjson_stream(spark, landing_dir, DOCUMENTS_SCHEMA)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = transform(batch_df)
-        if out.isEmpty():  # reference empty-chunk guard (main.R:75-78, 114)
-            return
-        out.write.mode("append").parquet(sink_path)
-
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    reference-parity flagship transform; each batch is appended with
+    the reference's empty-chunk guard (``main.R:75-78, 114``).
+    Returns the StreamingQuery (already awaited when bounded)."""
+    return _start(
+        spark,
+        landing_dir,
+        checkpoint_dir,
+        lambda batch_df, _batch_id: append_table(transform(batch_df), sink_path),
+        cadence_seconds=None if bounded else cadence_seconds,
+        await_seconds=await_seconds,
     )
-    if bounded:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination(await_seconds)
-    else:
-        q = writer.trigger(processingTime=f"{cadence_seconds} seconds").start()
-    return q
 
 
 def run_streaming_rollup(
@@ -230,19 +219,9 @@ def run_streaming_rollup(
     like `idempotent_batch_writer` gates its partition overwrite."""
     from ..rollup import update_rollup
 
-    stream = read_ndjson_stream(spark, landing_dir, DOCUMENTS_SCHEMA)
-
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         update_rollup(spark, rollup_dir, batch_df)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(await_seconds)
-    return q
+    return _start(spark, landing_dir, checkpoint_dir, _sink, await_seconds=await_seconds)
